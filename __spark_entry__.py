@@ -142,10 +142,9 @@ def _asof_clicks_purchases(spark, sf_dir, strategy):
     ev = _t(spark, sf_dir, "events")
     spine = ev.where(F.col("event_type") == "click").select("user_id", "ts", "event_id")
     feats = ev.where(F.col("event_type") == "purchase").select("user_id", "ts", "event_id", "value")
-    # bucket width sized so per-(entity, bucket) groups stay large enough
-    # to amortize the Arrow/pandas per-group overhead (~150 users over ~1
-    # month -> 7-day buckets ≈ 5 groups/user); correctness is width-
-    # independent (boundary carry), only group granularity changes.
+    # 7-day buckets: ~150 users over ~1 month -> ≈ 5 window partitions
+    # per user; correctness is width-independent (boundary carry), only
+    # partition granularity changes.
     # strategy="auto" exercises the data-driven width instead (measures the
     # hottest entity-day density and picks from a fixed grid).
     kw = {"strategy": "bucketed", "bucket": "auto"} if strategy == "auto" else {

@@ -51,7 +51,9 @@ def _build_parser(cfg: dict) -> argparse.ArgumentParser:
     m.add_argument("--trailing", default=pipe["trailing"])
     m.add_argument("--session-gap", default=pipe["session_gap"])
     m.add_argument("--asof-strategy", default=pipe["asof_strategy"],
-                   choices=["window", "cogroup", "bucketed"])
+                   choices=["window", "cogroup", "bucketed"],
+                   help="aliases of one as-of join: 'bucketed' splits it by "
+                        "--asof-bucket time buckets; 'window' and 'cogroup' do not")
     m.add_argument("--asof-bucket", default=pipe["asof_bucket"])
     m.add_argument("--n-buckets", type=int, default=pipe["n_buckets"])
     m.add_argument("--resume", action="store_true", help="skip buckets already checkpointed")
@@ -205,9 +207,9 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # materialize
-    from featherstore_spark.operators.asof import asof_join, auto_bucket_width_us
+    from featherstore_spark.operators.asof import auto_bucket_width_us
     from featherstore_spark.plans.checkpoint import CheckpointManifest, run_with_checkpoint
-    from featherstore_spark.plans.materialize import FEATURE_COLS, build_feature_log
+    from featherstore_spark.plans.materialize import build_feature_log, materialize
     from featherstore_spark.sources.io import table_format
 
     # Resolve the output format ONCE: run_with_checkpoint auto-detects
@@ -290,19 +292,13 @@ def main(argv: list[str] | None = None) -> int:
                 manifest.set_stat("asof_width_us", width)
         asof_bucket = int(width)
 
-    def pit_pipeline(t, s):
-        log = build_feature_log(t, args.trailing, args.session_gap)
-        feats = log.select("conv_id", "ts", "turn_idx", *FEATURE_COLS)
-        return asof_join(
-            s, feats, on="conv_id", ts="ts", tiebreaks=("turn_idx",),
-            strategy=args.asof_strategy, bucket=asof_bucket,
-        )
-
     metrics = run_with_checkpoint(
         transcripts,
         args.output,
         lineage,
-        pipeline=pit_pipeline,
+        pipeline=lambda t, s: materialize(
+            t, s, args.trailing, args.session_gap, args.asof_strategy, asof_bucket
+        ),
         spine=spine,
         **ckpt_kwargs,
     )

@@ -42,7 +42,7 @@ DEFAULTS: dict[str, dict[str, Any]] = {
     # Output format (reference storage.backend / storage.parquet.*).
     "storage": {
         "format": None,            # None: auto-detect Iceberg extensions
-        "compression": "lz4",
+        "compression": "lz4_raw",
     },
     # Serving tier (reference server.http_port/flight_port defaults).
     "serving": {

@@ -107,51 +107,6 @@ def signed_sum(vec_col: Column | str, signs: list[int]) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
-
-
-def murmur3_int32(x: int, seed: int = 42) -> int:
-    """Spark's Murmur3_x86_32 hash of a 4-byte int (seed 42) — the hash
-    behind ``F.hash`` / HashPartitioning for int columns.  Returns the
-    SIGNED 32-bit value Spark returns.  Verified against ``F.hash`` in
-    tests/test_types.py."""
-    k1 = ((x & 0xFFFFFFFF) * 0xCC9E2D51) & 0xFFFFFFFF
-    k1 = (_rotl32(k1, 15) * 0x1B873593) & 0xFFFFFFFF
-    h1 = seed ^ k1
-    h1 = _rotl32(h1, 13)
-    h1 = (h1 * 5 + 0xE6546B64) & 0xFFFFFFFF
-    h1 ^= 4  # length in bytes
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & 0xFFFFFFFF
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & 0xFFFFFFFF
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def partition_identity_keys(n_partitions: int, max_probe: int = 1_000_000) -> list[int]:
-    """Representative int keys c_b with ``pmod(murmur3(c_b), n) == b`` for
-    every partition b — lets a DataFrame be hash-repartitioned so that
-    bucket id b lands EXACTLY in shuffle partition b.
-
-    Why: ``repartition(col)`` murmur-hashes the column value, and hashing
-    a low-cardinality bucket id collides values into shared partitions
-    (64 bucket values over 128 partitions leave ~37% of tasks empty and
-    give stragglers 2-3 buckets — measured 20-50%% write-stage inflation).
-    ``repartitionByRange`` fixes the collision but SAMPLES its child,
-    re-evaluating the whole upstream pipeline (measured ~2x wall).  A
-    host-side searched remap costs nothing at runtime."""
-    keys: dict[int, int] = {}
-    for cand in range(max_probe):
-        b = murmur3_int32(cand) % n_partitions  # python % == pmod for n>0
-        if b not in keys:
-            keys[b] = cand
-            if len(keys) == n_partitions:
-                return [keys[b] for b in range(n_partitions)]
-    raise RuntimeError(f"no full remap found for {n_partitions} partitions")
-
-
 _P64_1 = 0x9E3779B185EBCA87
 _P64_2 = 0xC2B2AE3D27D4EB4F
 _P64_3 = 0x165667B19E3779F9

@@ -53,6 +53,10 @@ Q_OFFSET = 1.0
 #: inputs; measured 2.5 s join vs 6.0 s BLAS at sf0.1, and 3.7 s BLAS vs
 #: ~12 s join at sf1.0's 25M pairs).  Both branches are bit-identical.
 _SEMDEDUP_PAIR_JOIN_MAX = 2_000_000
+#: Per-task pair-block cap of the BLAS branch (float64 S-block ≤ 32 MB).
+#: Groups are sized for HALF of it, so the hash-partition variance of
+#: group sizes cannot push a block over the cap.
+_SEMDEDUP_MAX_TASK_PAIRS = 4_000_000
 
 
 def quantize_vec(vec_col, dim: int, scale: int = Q_SCALE, offset: float = Q_OFFSET):
@@ -261,8 +265,8 @@ def semantic_dedup(
     # The norm is precomputed per ROW here so the per-PAIR condition is
     # one dot + a division instead of three HOF folds
     # (similarity._cos_prenorm: bit-identical arithmetic — measured 3.8×
-    # on the pair join; the expanded fixed-dim dot measured SLOWER than
-    # the HOF fold and is not used).
+    # on the pair join; an expanded fixed-dim dot measured SLOWER than
+    # the HOF fold).
     members = (
         assigned.select(
             F.col(id_col).alias("mid"),
@@ -300,7 +304,7 @@ def semantic_dedup(
     import pandas as pd
 
     par = df.sparkSession.sparkContext.defaultParallelism
-    max_task_pairs = 4_000_000  # float64 S-block ≤ 32 MB per task
+    max_task_pairs = _SEMDEDUP_MAX_TASK_PAIRS
     srow = (
         paired.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -312,7 +316,9 @@ def semantic_dedup(
         return members.select(
             F.col("mid").alias(id_col), "cluster_id", F.lit(True).alias("keep")
         )
-    thr = float(threshold)
+    # one 6-dp literal for both branches: the BLAS band proof below
+    # assumes round6(cos) >= t with t representable at 6 decimals
+    thr = round(float(threshold), 6)
     if pairs_est <= _SEMDEDUP_PAIR_JOIN_MAX:
         # SMALL pair space: the plain within-cluster equi-join (with the
         # per-row-norm cosine) beats the BLAS machinery's fixed costs
@@ -344,7 +350,7 @@ def semantic_dedup(
                 F.coalesce(~F.col("__drop"), F.lit(True)).alias("keep"),
             )
         )
-    g_mem = int(np.ceil(size_max / max(np.sqrt(max_task_pairs), 1.0)))
+    g_mem = int(np.ceil(size_max / max(np.sqrt(max_task_pairs / 2), 1.0)))
     g_par = 1
     while g_par * (g_par + 1) // 2 * max(k, 1) < 2 * par:
         g_par += 1

@@ -256,6 +256,12 @@ def run_with_checkpoint(
       would emit all-null feature rows into buckets whose transcripts
       were pruned, silently overwriting completed partitions.
 
+    Layout: exactly one parquet file per non-empty bucket, whatever
+    partitioning the pipeline's output carries — so the write stage runs
+    at most ``n_buckets`` busy tasks.  At cluster scale ``n_buckets``
+    therefore bounds write parallelism (and each bucket is one task's
+    write); size it to the cluster.
+
     Commit metrics (row_count + content hash per bucket) ride the WRITE
     job via ``observe()`` — the output is scanned zero extra times.
     ``verify=True`` additionally reads the written partitions back and
@@ -303,9 +309,13 @@ def run_with_checkpoint(
             pending_spine = pending_spine.where(~F.col("p_bucket").isin(sorted(done)))
         result = pipeline(pending_input.drop("p_bucket"), pending_spine.drop("p_bucket"))
 
-    out = result.withColumn("p_bucket", b)
+    # The layout is decided here, not inherited from the pipeline's last
+    # shuffle: each bucket's rows meet in one write task, sorted bucket
+    # first so the partitioned writer opens each bucket's file once, then
+    # by (entity, turn) — the byte-equality order inside the file.
+    out = result.withColumn("p_bucket", b).repartition("p_bucket")
     sort_key = "turn_idx" if "turn_idx" in out.columns else "ts"
-    out = out.sortWithinPartitions(entity_col, sort_key) if sort_key in out.columns else out
+    out = out.sortWithinPartitions(*[c for c in ("p_bucket", entity_col, sort_key) if c in out.columns])
     out, obs_list = _observed_bucket_stats(out, pending)
     write_partitioned(out, output_path, ("p_bucket",), fmt=fmt)
 

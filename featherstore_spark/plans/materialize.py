@@ -8,18 +8,19 @@ Plan hygiene (verified via .explain in tests/test_plans.py):
 - ``turn_features``, ``rolling_features`` and ``sessionize`` all window
   over conv_id with compatible orderings, so Catalyst reuses ONE shuffle
   of the transcript table for the whole per-turn stage.
-- The only other shuffles are the as-of join's entity shuffle and the
-  final write partitioning — no cartesian products, no driver collects.
-- Output ordering (conv_id, turn_idx) is applied as
-  ``sortWithinPartitions`` after repartitioning by bucket: global order is
-  NOT required by the byte-equality invariant (it is per-turn stable
-  ordering), so we avoid a global range sort at 10^12 rows.
+- The only other shuffles are the as-of join's (entity, time bucket)
+  shuffle and the checkpoint write's bucket repartition — no cartesian
+  products, no driver collects.
+- Output ordering (conv_id, turn_idx) is applied by
+  ``plans.checkpoint.run_with_checkpoint`` as ``sortWithinPartitions``
+  after repartitioning by bucket: global order is NOT required by the
+  byte-equality invariant (it is per-turn stable ordering), so we avoid a
+  global range sort at 10^12 rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from featherstore_spark.operators.asof import asof_join
 from featherstore_spark.operators.sessionize import sessionize
@@ -66,7 +67,7 @@ def materialize(
     trailing: str = "10 minutes",
     session_gap: str = "30 minutes",
     asof_strategy: str = "window",
-    asof_bucket: str = "1 day",
+    asof_bucket: str | int = "1 day",
     validate: bool = True,
 ) -> DataFrame:
     """Full pipeline.  With a spine: point-in-time feature vectors at every
@@ -86,26 +87,3 @@ def materialize(
         bucket=asof_bucket,
     )
 
-
-def ordered_output(df: DataFrame, n_buckets: int = 64) -> DataFrame:
-    """Stable (conv_id, turn_idx) ordering inside each output partition —
-    the north-rule byte-equality contract — without a global sort.
-
-    Bucket b is steered EXACTLY to shuffle partition b by repartitioning
-    on a host-computed representative key (hashing.partition_identity_keys:
-    murmur3(c_b) % n == b).  Hash-repartitioning on the raw bucket id
-    collides low-cardinality values into shared partitions (measured
-    20-50% write-stage straggler inflation); repartitionByRange avoids
-    the collision but SAMPLES its child, re-evaluating the whole feature
-    pipeline (measured ~2x wall).  The remap costs nothing at runtime:
-    one array literal lookup, one exchange, one file per bucket."""
-    from featherstore_spark.functions.hashing import partition_identity_keys
-
-    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    keys = partition_identity_keys(n_buckets)
-    remap = F.element_at(F.array(*[F.lit(k) for k in keys]), F.col("p_bucket") + 1)
-    return (
-        df.withColumn("p_bucket", bucket)
-        .repartition(n_buckets, remap)
-        .sortWithinPartitions("conv_id", "turn_idx")
-    )

@@ -2,13 +2,13 @@
 
 Reference parity: featherstore's primary backend IS DuckDB — it creates
 one table per feature set and serves point queries from it
-(/root/reference/pkg/storage/duckdb/duckdb.go:117-179,608-689).  In this
+(featherstore pkg/storage/duckdb/duckdb.go:117-179,608-689).  In this
 engine DuckDB's role is normally the *oracle*, but the serving-side use
 case is real: materialized features handed to a single-node analytical
 store for dashboards/offline reads.  The export path is Spark-native:
 
-    distributed parquet write (snappy — DuckDB cannot read Spark's lz4
-    frame codec)  ->  one DuckDB `CREATE TABLE ... FROM read_parquet`
+    distributed parquet write (the session codec)  ->  one DuckDB
+    `CREATE TABLE ... FROM read_parquet`
 
 so the only single-node step is DuckDB's own parallel parquet ingest of
 already-materialized files; Spark never collects rows to the driver.
@@ -45,7 +45,7 @@ def write_duckdb(
     staging = tempfile.mkdtemp(prefix="fs_duckdb_sink_", dir=staging_dir)
     try:
         parquet_dir = os.path.join(staging, "export")
-        df.write.mode("overwrite").option("compression", "snappy").parquet(parquet_dir)
+        df.write.mode("overwrite").parquet(parquet_dir)
         glob = os.path.join(parquet_dir, "*.parquet")
         # A 0-row DataFrame can legally produce zero part files (AQE empty
         # relation); read_parquet on an empty glob raises, so detect it and

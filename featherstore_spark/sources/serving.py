@@ -128,6 +128,15 @@ def _manifest_n_buckets(path: str):
     return next(iter(found.values()), None)
 
 
+def _manifest_mtime(path: str) -> int | None:
+    """``st_mtime_ns`` of a checkpoint output's ``_manifest.json`` (None
+    without one): the version a cached view of the table is valid for."""
+    try:
+        return os.stat(os.path.join(path, "_manifest.json")).st_mtime_ns
+    except OSError:
+        return None
+
+
 #: Reference latency bucket layout: prometheus.ExponentialBuckets(0.001, 2, 10)
 #: (pkg/metrics/metrics.go:84-116) — 1 ms … 512 ms, +Inf implicit.
 LATENCY_BUCKETS = tuple(0.001 * 2**i for i in range(10))
@@ -581,21 +590,27 @@ class ServingStore:
     def bucketed(self, name: str) -> "BucketedTable":
         # cached per name: BucketedTable.__init__ runs full dataset file
         # discovery — per-lookup rediscovery would make the "constant
-        # work point read" O(total files) in metadata again.  Invalidated
-        # by register_bucketed_table.
+        # work point read" O(total files) in metadata again.  Keyed on the
+        # table manifest's mtime (one stat per lookup): a re-materialization
+        # replaces the part files and rewrites the manifest, so the cached
+        # file list would point at deleted files.  Also invalidated by
+        # register_bucketed_table.
         cached = getattr(self, "_bucketed_cache", None)
         if cached is None:
             cached = self._bucketed_cache = {}
-        if name not in cached:
-            try:
-                with open(os.path.join(self._path(name), "bucketed.json")) as fh:
-                    reg = json.load(fh)
-            except FileNotFoundError:
-                raise ServingError(f"no bucketed table registered as {name!r}") from None
-            cached[name] = BucketedTable(
-                reg["path"], reg["entity_col"], reg["ts_col"], reg["n_buckets"]
-            )
-        return cached[name]
+        hit = cached.get(name)
+        if hit is not None and hit[1] == _manifest_mtime(hit[0].path):
+            return hit[0]
+        try:
+            with open(os.path.join(self._path(name), "bucketed.json")) as fh:
+                reg = json.load(fh)
+        except FileNotFoundError:
+            raise ServingError(f"no bucketed table registered as {name!r}") from None
+        # stat before discovery: a rewrite racing it shows up next lookup
+        version = _manifest_mtime(reg["path"])
+        bt = BucketedTable(reg["path"], reg["entity_col"], reg["ts_col"], reg["n_buckets"])
+        cached[name] = (bt, version)
+        return bt
 
     def get_bucketed_rows(self, name: str, entity_ids) -> pa.Table:
         """All rows for the requested entities from a registered bucketed

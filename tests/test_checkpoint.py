@@ -474,3 +474,27 @@ def test_asof_supplied_width_runs_no_stats_job(spark, transcripts, monkeypatch):
         strategy="bucketed", bucket=3_600_000_000,
     )
     assert out.count() == spine.count()
+
+
+def _files_per_bucket(out):
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(out, d)))
+        for d in os.listdir(out)
+        if d.startswith("p_bucket=")
+    }
+
+
+def test_one_file_per_bucket_on_both_paths(spark, transcripts, tmp_path):
+    """The checkpoint write owns its layout: one parquet file per
+    non-empty bucket, whatever partitioning the pipeline's output carries
+    (the feature log ends in a conv_id shuffle, the spine path in the
+    as-of window's)."""
+    log_out, pit_out = str(tmp_path / "log"), str(tmp_path / "pit")
+    run_with_checkpoint(transcripts, log_out, LINEAGE, n_buckets=8)
+    spine = transcripts.where(F.col("role") == "user").select("conv_id", "ts").distinct()
+    lineage = {"input": "unit-corpus-seed42", "spine": "user-turns", "params": {}}
+    run_with_checkpoint(transcripts, pit_out, lineage, n_buckets=8, spine=spine)
+    for out in (log_out, pit_out):
+        per_bucket = _files_per_bucket(out)
+        assert len(per_bucket) == len(_read_manifest(out)["buckets"]) > 1
+        assert set(per_bucket.values()) == {1}, per_bucket

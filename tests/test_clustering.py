@@ -143,3 +143,55 @@ def test_quantize_rejects_null_vector_and_nan(spark):
         df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
         with pytest.raises(Exception, match="fixed-point"):
             kmeans_fit_assign(df, k=1, iters=0, dim=8)[0].collect()
+
+
+def _keep_map(df, **kw):
+    return {r["vec_id"]: r["keep"] for r in semantic_dedup(df, k=1, iters=1, dim=8, **kw).collect()}
+
+
+def test_semantic_dedup_blas_groups_have_headroom(spark, monkeypatch):
+    """The BLAS branch sizes its hash groups against HALF the per-task
+    pair cap: with groups sized against the full cap, the expected group
+    is exactly sqrt(cap) rows and ordinary hash variance pushes some
+    block over the cap, failing the job with ValueError."""
+    import numpy as np
+
+    import featherstore_spark.operators.clustering as clustering_mod
+
+    rng = np.random.RandomState(3)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rng.rand(8)]) for i in range(400)],
+        "vec_id long, embedding array<double>",
+    )
+    monkeypatch.setattr(clustering_mod, "_SEMDEDUP_PAIR_JOIN_MAX", 0)  # force BLAS
+    # 400 rows in one cluster: sqrt(cap) = 100 rows per group at full cap
+    monkeypatch.setattr(clustering_mod, "_SEMDEDUP_MAX_TASK_PAIRS", 10_000)
+    assert len(_keep_map(df, threshold=0.99)) == 400
+
+
+def test_semantic_dedup_threshold_rounded_for_both_branches(spark, monkeypatch):
+    """A threshold with more than 6 decimals is rounded at entry, so the
+    plain-join and BLAS branches take the same drop decision on a pair at
+    exactly cos = 0.85 (round6 = 0.85 >= round6(0.8500001))."""
+    import math
+
+    import featherstore_spark.operators.clustering as clustering_mod
+
+    a = [1.0] + [0.0] * 7
+    b = [0.85, math.sqrt(1 - 0.85 * 0.85)] + [0.0] * 6
+    c = [0.0, 0.0, 1.0] + [0.0] * 5
+    df = spark.createDataFrame([(1, a), (2, b), (3, c)], "vec_id long, embedding array<double>")
+    join = _keep_map(df, threshold=0.8500001)
+    monkeypatch.setattr(clustering_mod, "_SEMDEDUP_PAIR_JOIN_MAX", 0)
+    blas = _keep_map(df, threshold=0.8500001)
+    assert join == blas == {1: True, 2: False, 3: True}
+
+
+def test_cos_prenorm_has_no_fixed_dim_path():
+    """The unrolled fixed-dim dot is gone: it went NULL whenever ``dim``
+    exceeded the vector length, unlike the length-generic HOF fold."""
+    import featherstore_spark.operators.similarity as similarity
+
+    assert not hasattr(similarity, "_dot_fixed")
+    with pytest.raises(TypeError):
+        similarity._cos_prenorm("a", "b", "na", "nb", dim=8)

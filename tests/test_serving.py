@@ -723,3 +723,51 @@ def test_points_max_staleness_ttl(served):
     from featherstore_spark.sources.serving import ServingError
     with _pytest.raises(ServingError, match="non-negative"):
         store.get_features_at("convfeat", points, max_staleness=-5)
+
+
+def test_serving_reads_engine_parquet_at_scale(spark, tmp_path):
+    """Every row of a ~30k-row checkpointed materialization (one bucket,
+    so one file with large pages) reads back through the serving tier.
+    Spark's Hadoop-framed ``lz4`` codec broke this ("Corrupt Lz4
+    compressed data" from pyarrow); the session writes parquet-standard
+    ``lz4_raw``."""
+    from featherstore_spark.datagen import generate_transcripts
+    from featherstore_spark.plans.checkpoint import run_with_checkpoint
+    from featherstore_spark.sources.serving import ServingStore
+
+    corpus = str(tmp_path / "corpus")
+    generate_transcripts(spark, n_convs=2000, mean_turns=15, seed=5).write.parquet(corpus)
+    t = spark.read.parquet(corpus)
+    out = str(tmp_path / "feat")
+    run_with_checkpoint(t, out, {"input": "serve-30k", "params": {"n_buckets": 1}}, n_buckets=1)
+    exp = spark.read.parquet(out).agg(F.count(F.lit(1)), F.sum("cum_turns")).first()
+    assert exp[0] > 25_000
+
+    store = ServingStore(str(tmp_path / "root"))
+    store.register_bucketed_table("featlog", out)
+    ids = [r[0] for r in t.select("conv_id").distinct().collect()]
+    got = store.get_bucketed_rows("featlog", ids)
+    assert got.num_rows == exp[0]
+    assert sum(got.column("cum_turns").to_pylist()) == exp[1]
+
+
+def test_bucketed_view_follows_rematerialization(spark, transcripts, tmp_path):
+    """A clean re-run into the served path replaces every part file; the
+    cached dataset must be rediscovered (keyed on the manifest's mtime),
+    not keep pointing at deleted files."""
+    from featherstore_spark.plans.checkpoint import clear_stale_output, run_with_checkpoint
+    from featherstore_spark.sources.serving import ServingStore
+
+    out = str(tmp_path / "feat")
+    lineage = {"input": "remat", "params": {"n_buckets": 8}}
+    run_with_checkpoint(transcripts, out, lineage, n_buckets=8)
+    store = ServingStore(str(tmp_path / "root"))
+    store.register_bucketed_table("featlog", out)
+    ent = transcripts.select("conv_id").first()[0]
+    before = store.get_features("featlog", entity_ids=[ent])
+    assert before.num_rows == 1
+
+    clear_stale_output(out)
+    run_with_checkpoint(transcripts, out, lineage, n_buckets=8)
+    after = store.get_features("featlog", entity_ids=[ent])
+    assert after.to_pylist() == before.to_pylist()

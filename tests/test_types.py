@@ -99,23 +99,6 @@ def test_nested_type_parsing():
     assert arrow_to_spark_type("decimal256(76, 2)") == T.StringType()
 
 
-def test_murmur3_matches_spark_hash(spark):
-    """hashing.murmur3_int32 must track F.hash exactly — the partition
-    identity remap (ordered_output) depends on it."""
-    from pyspark.sql import functions as F
-
-    from featherstore_spark.functions.hashing import murmur3_int32, partition_identity_keys
-
-    vals = list(range(-50, 300)) + [2**31 - 1, -(2**31)]
-    got = spark.createDataFrame([(v,) for v in vals], "v int").select(
-        "v", F.hash("v").alias("h")
-    ).collect()
-    assert all(murmur3_int32(r["v"]) == r["h"] for r in got)
-    for n in (4, 16, 64, 128):
-        keys = partition_identity_keys(n)
-        assert [murmur3_int32(k) % n for k in keys] == list(range(n))
-
-
 def test_split_top_level_tracks_parens():
     """ADVICE r2: a comma inside a parameterized leaf (decimal128(10, 2))
     must not split the sibling list — only the UNKNOWN leaf degrades to
